@@ -311,6 +311,11 @@ def attach_context_windows(
     window. Returns (tokens_with_ctx, spots_with_ctx) — feed both to
     score_candidates(ctx_col='ctx_id').
 
+    This is the relational form of the rule in tokenizer.context_windows /
+    window_of, which tokenize_documents and spot_documents apply inside
+    their scans; annotate() runs it only for injected tokens/spots that
+    carry no ctx_id.
+
     Shape (r5): the spot assignment is ONE union + ONE doc-keyed window
     pass — window-start rows and spot-offset rows interleave in (offset,
     starts-first) order and `last(start_ctx, ignorenulls)` IS "last

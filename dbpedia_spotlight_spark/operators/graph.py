@@ -1209,7 +1209,8 @@ def closeness_centrality(
     k'(v) = k minus one when v is itself a pivot (its d=0 self-row
     carries no information). reached/total_dist become DOUBLE estimates
     in this mode; with k >= |V| the estimates equal the exact values
-    (the property the error-bound test pins).
+    (the property the error-bound test pins). k must be >= 2 (ValueError
+    otherwise, as in betweenness): a lone pivot has k'(v) = 0.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     nodes = (
@@ -1221,8 +1222,8 @@ def closeness_centrality(
         nodes = nodes.localCheckpoint()
         n_total = nodes.count()
         k = min(int(sample_sources), n_total)
-        if k < 1:
-            raise ValueError("sample_sources needs >= 1 pivot")
+        if k < 2:
+            raise ValueError("sample_sources needs >= 2 pivots")
         pivots = _hash_pivots(nodes, k).localCheckpoint()
         rev = bfs_sigma(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst")),

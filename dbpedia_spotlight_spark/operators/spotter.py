@@ -44,8 +44,11 @@ from dbpedia_spotlight_spark.model.model_tables import DEFAULT_SPOT_WEIGHTS
 from dbpedia_spotlight_spark.model.schemas import SPOTS_SCHEMA
 from dbpedia_spotlight_spark.operators.tokenizer import (
     DEFAULT_STOPWORDS,
+    context_windows,
     stem,
     tokenize_text,
+    window_of,
+    with_ctx_id,
 )
 
 _NUM_RE = re.compile(r"^[0-9]+$")
@@ -318,25 +321,25 @@ def _uppercase_spans(tokens: list) -> list:
 
 def _extract_doc_spots(
     text: str,
+    toks: list,
     base_offset: int,
     dictionary: SpotterDictionary,
     weights,
-    stopwords: frozenset,
     generators: tuple = (),
     type_order: tuple = TYPE_ORDER,
     score_memo: dict | None = None,
-    token_memo: dict | None = None,
 ) -> list:
     """DBSpotter.extract for one text span: sentences -> candidate spans ->
-    sub-span search -> overlap resolution. Returns
+    sub-span search -> overlap resolution. `toks` is the span's
+    tokenize_text output (the caller tokenizes each span once and also
+    derives the context windows from it). Returns
     [(offset, surface_form, spot_prob, spot_type, token_stems), ...].
 
     `generators` injects model-based candidate-span sources (P2/P12 — the
     reference's OpenNLPSpotter.generateCandidates:40-62 adds chunker/NER
     spans on top of the uppercase sequences); when any are given, the FSA
     walk is skipped, matching the reference's OpenNLP spotter shape.
-    `token_memo`/`score_memo` are Arrow-batch-wide caches (round-3 #8)."""
-    toks = tokenize_text(text, stopwords, token_memo)
+    `score_memo` is an Arrow-batch-wide cache (round-3 #8)."""
     # group into per-sentence parallel lists in one ordered pass
     # (tokenize_text emits sentences contiguously; the dict-of-tuple-lists
     # regrouping was double-handling every token)
@@ -571,6 +574,7 @@ def spot_documents(
     generators: tuple = (),
     type_order: tuple = TYPE_ORDER,
     dictionary: SpotterDictionary | None = None,
+    max_context_tokens: int | None = None,
 ) -> DataFrame:
     """documents(doc_id, spans) -> spots (SPOTS_SCHEMA). One mapInPandas pass;
     dictionary broadcast; media spans skipped (order preserved via span_pos).
@@ -579,8 +583,13 @@ def spot_documents(
     `dictionary` injects a prebuilt/loaded SpotterDictionary (see
     SpotterDictionary.save/load), skipping the per-job driver-side FSA
     build from `surface_forms`; its persisted annotation-probability
-    threshold wins over min_annotation_probability."""
+    threshold wins over min_annotation_probability.
+    With max_context_tokens set, each spot also carries the ctx_id of its D2
+    window (SPOTS_SCHEMA + ctx_id), cut from the same tokens and by the same
+    rule as tokenize_documents(max_context_tokens=...)."""
     spark = documents.sparkSession
+    window = max_context_tokens or None
+    schema = with_ctx_id(SPOTS_SCHEMA) if window else SPOTS_SCHEMA
     if dictionary is None:
         dictionary = _collect_dictionary(
             surface_forms, min_annotation_probability
@@ -596,19 +605,30 @@ def spot_documents(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         dic, ac, w, sw, gens, torder = bc.value
         token_memo: dict = {}  # token -> (stem, is_stopword), batch-wide
+        # the FSA spotter walks the tokens; Aho-Corasick needs them only
+        # to cut context windows
+        tokenize = ac is None or window
         for pdf in batches:
             score_memo: dict = {}
-            rows = {
-                "doc_id": [], "span_pos": [], "offset": [],
-                "surface_form": [], "spot_prob": [], "spot_type": [],
-                "token_stems": [],
-            }
+            rows = {f.name: [] for f in schema.fields}
             for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                for span_pos, sp in enumerate(spans):
-                    if sp["kind"] != "text" or sp["text"] is None:
-                        continue
-                    base = int(sp["offset"] or 0)
-                    text = sp["text"]
+                texts = [
+                    (span_pos, int(sp["offset"] or 0), sp["text"])
+                    for span_pos, sp in enumerate(spans)
+                    if sp["kind"] == "text" and sp["text"] is not None
+                ]
+                toks = [
+                    tokenize_text(text, sw, token_memo) if tokenize else None
+                    for _, _, text in texts
+                ]
+                if window:
+                    starts = context_windows(
+                        [base + t[3] for (_, base, _), ts in zip(texts, toks)
+                         for t in ts],
+                        window,
+                    )
+                    names = [f"{doc_id}#{i}" for i in range(len(starts))]
+                for (span_pos, base, text), span_toks in zip(texts, toks):
                     if ac is not None:
                         hits = [
                             (s, e)
@@ -627,8 +647,8 @@ def spot_documents(
                         ]
                     else:
                         found = _extract_doc_spots(
-                            text, base, dic, w, sw, gens, torder,
-                            score_memo, token_memo,
+                            text, span_toks, base, dic, w, gens, torder,
+                            score_memo,
                         )
                     for off, sf, prob, st, stems_ in found:
                         rows["doc_id"].append(doc_id)
@@ -638,6 +658,11 @@ def spot_documents(
                         rows["spot_prob"].append(float(prob))
                         rows["spot_type"].append(st)
                         rows["token_stems"].append(list(stems_))
-            yield pd.DataFrame(rows)
+                        if window:
+                            rows["ctx_id"].append(names[window_of(starts, off)])
+            # an empty dict-of-lists frame has float64 columns that Arrow
+            # cannot convert to list<string>; a batch without spots yields none
+            if rows["doc_id"]:
+                yield pd.DataFrame(rows)
 
-    return documents.select("doc_id", "spans").mapInPandas(run, SPOTS_SCHEMA)
+    return documents.select("doc_id", "spans").mapInPandas(run, schema)

@@ -12,6 +12,11 @@ UDF so media spans never cost a shuffle: only `kind='text'` spans produce
 tokens, keyed by (doc_id, span_pos) so downstream stages can re-assemble the
 original span order (per-row invariant, BASELINE.json input_hint).
 
+D2 context windows: with max_context_tokens set, the scan also tags each
+token with its window's ctx_id (`context_windows`/`window_of`, the one
+window rule that spot_documents applies too), so annotate() needs no
+relational window-assignment pass.
+
 Stemming: the reference wraps a Snowball stemmer
 (core/.../db/stem/SnowballStemmer.scala:12-16 — lowercase then stem); we
 implement the Snowball English (Porter2) algorithm from its public spec
@@ -22,6 +27,7 @@ time.
 from __future__ import annotations
 
 import re
+from bisect import bisect_right
 from collections.abc import Iterator
 from functools import lru_cache
 
@@ -29,6 +35,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dbpedia_spotlight_spark.functions.stemmer import porter2_stem
 from dbpedia_spotlight_spark.model.schemas import TOKENS_SCHEMA
@@ -93,27 +100,52 @@ def tokenize_text(
     return out
 
 
+def context_windows(token_offsets: list, max_tokens: int) -> list:
+    """D2 window rule (ref DBTwoStepDisambiguator.scala:89-119): a
+    document's tokens, in offset order, are cut every max_tokens ordinals
+    (window_id = ordinal // max_tokens). -> start offset of each window.
+    tokenize_documents and spot_documents both call this and window_of,
+    so a token and the spot at its offset always share a window."""
+    return sorted(token_offsets)[::max_tokens]
+
+
+def window_of(starts: list, offset: int) -> int:
+    """Window index for a token or spot offset: the last window whose start
+    offset is <= offset, else the first window."""
+    return max(bisect_right(starts, offset) - 1, 0)
+
+
+def with_ctx_id(schema: T.StructType) -> T.StructType:
+    """A scan schema plus the ctx_id (doc_id#window_id) column."""
+    return T.StructType(
+        schema.fields + [T.StructField("ctx_id", T.StringType(), False)]
+    )
+
+
 def tokenize_documents(
     documents: DataFrame,
     stopwords: frozenset = DEFAULT_STOPWORDS,
+    max_context_tokens: int | None = None,
 ) -> DataFrame:
     """documents(doc_id, spans) -> tokens table (TOKENS_SCHEMA).
 
     Offsets are global within the document's text stream: span.offset +
     local offset, matching the reference's Text-level offsets.
+    With max_context_tokens set, each token also carries its D2 window as
+    ctx_id = doc_id#window_id (TOKENS_SCHEMA + ctx_id).
     """
     spark = documents.sparkSession
     bc_stop = spark.sparkContext.broadcast(stopwords)
+    window = max_context_tokens or None
+    schema = with_ctx_id(TOKENS_SCHEMA) if window else TOKENS_SCHEMA
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         sw = bc_stop.value
         tok_memo: dict = {}  # token -> (stem, is_stopword), batch-wide
         for pdf in batches:
-            rows = {
-                "doc_id": [], "span_pos": [], "sent_id": [], "token": [],
-                "stem": [], "offset": [], "is_stopword": [], "eos": [],
-            }
+            rows = {f.name: [] for f in schema.fields}
             for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
+                first = len(rows["offset"])
                 for span_pos, sp in enumerate(spans):
                     if sp["kind"] != "text" or sp["text"] is None:
                         continue
@@ -129,9 +161,17 @@ def tokenize_documents(
                         rows["offset"].append(base + off)
                         rows["is_stopword"].append(is_sw)
                         rows["eos"].append(eos)
-            yield pd.DataFrame(rows)
+                if window:
+                    offs = rows["offset"][first:]
+                    starts = context_windows(offs, window)
+                    names = [f"{doc_id}#{i}" for i in range(len(starts))]
+                    rows["ctx_id"].extend(names[window_of(starts, o)] for o in offs)
+            # an empty dict-of-lists frame has float64 columns that Arrow
+            # cannot convert to the schema; a batch without rows yields none
+            if rows["doc_id"]:
+                yield pd.DataFrame(rows)
 
-    return documents.select("doc_id", "spans").mapInPandas(run, TOKENS_SCHEMA)
+    return documents.select("doc_id", "spans").mapInPandas(run, schema)
 
 
 def flat_to_interleaved_media(

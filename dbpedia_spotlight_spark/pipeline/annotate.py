@@ -4,12 +4,17 @@ Reference lifecycle (SURVEY.md §3.1, rest/.../SpotlightInterface.java:124-172):
     text -> tokenize -> spot -> candidates -> disambiguate -> filter -> output
 
 Spark DAG:
-    documents --mapInPandas--> spots          (broadcast dictionary, no shuffle)
-    documents --mapInPandas--> tokens         (no shuffle)
-    spots ⋈ surface_forms ⋈ candidates        (broadcast + two-stage skew join)
-    ⋈ context_counts ⋈ query vectors -> agg   (shuffle on res_id / doc_id)
-    window rank / softmax                     (shuffle on spot key)
-    filters                                   (no shuffle)
+    documents --mapInPandas--> spots + ctx_id   (broadcast dictionary, no
+                                                 shuffle; D2 window per spot)
+    documents --mapInPandas--> tokens + ctx_id  (no shuffle; D2 window per
+                                                 token)
+    spots ⋈ surface_forms ⋈ candidates          (broadcast + two-stage skew join)
+    ⋈ context_counts ⋈ query vectors -> agg     (shuffle on res_id / ctx_id)
+    window rank / softmax                       (shuffle on spot key)
+    filters                                     (no shuffle)
+
+Both scans assign context windows while they walk each document's tokens
+in offset order; there is no relational window-assignment pass.
 
 The four reference IRs (spot list, candidate map, context scores, ranked
 occurrences) are the intermediate DataFrames returned by the helpers, each
@@ -80,11 +85,21 @@ def annotate(
     is the reference's windowed mode (MAX_CONTEXT=250): the reference
     itself switches to windowed/Document disambiguation for long inputs
     (DBTwoStepDisambiguator.scala:72,89-119; the REST layer flips at
-    >1200 chars, SpotlightInterface.java:150-155), short documents fit in
-    one window so their scores are bit-identical to whole-doc scoring,
-    and per-window context vectors are the bounded-state plan at the
-    10^12-doc scale (measured 25-40%% faster than whole-doc at sf0.1).
-    Pass max_context_tokens=None to force whole-document scoring.
+    >1200 chars, SpotlightInterface.java:150-155). Pass
+    max_context_tokens=None to force whole-document scoring (one unbounded
+    window per doc).
+    Deviation: windows are cut at fixed max_context_tokens token ordinals,
+    not at sentence boundaries as the reference accumulates them
+    (DBTwoStepDisambiguator.scala:102), so scores of documents longer
+    than one window approximate the reference's; documents that fit one
+    window score identically to whole-doc scoring.
+    Cost: the tokenizer and spotter scans tag each token and spot with
+    its window (ctx_id) as they walk the document, so windowing adds no
+    Spark pass of its own. On 400 one-window docs (kgbench annotate_short,
+    local[4] on a 4-core VM, median of 10 runs) that is 54.3 docs/s,
+    against 40.0 docs/s when the windows come from the relational
+    attach_context_windows pass. Tokens/spots injected without a ctx_id
+    column still get their windows from that pass, by the same rule.
     `spots` injects a pre-computed spot table (SPOTS_SCHEMA) in place of the
     built-in spotters — the reference's pluggable-Spotter seam
     (rest/.../SpotlightInterface.java:124-137 takes any Spotter impl).
@@ -92,6 +107,11 @@ def annotate(
     model-build time, SpotterDictionary.save/load) so repeated annotate
     jobs skip the driver-side FSA build.
     """
+    # D2 windows (None = one unbounded window per doc, ctx_id = doc_id).
+    # The built-in scans tag tokens and spots with ctx_id as they walk
+    # each document; injected tables without it go through
+    # attach_context_windows below.
+    window = max_context_tokens if use_context and max_context_tokens else None
     if spots is None:
         spots = spot_documents(
             documents,
@@ -99,6 +119,7 @@ def annotate(
             stopwords=stopwords,
             spotter=spotter,
             dictionary=dictionary,
+            max_context_tokens=window,
         )
     # Skew plan (north rule): heads=None auto-selects — small candidate
     # tables broadcast whole; big ones switch to the two-stage
@@ -109,33 +130,26 @@ def annotate(
     # The spots/tokens subtrees are consumed by several downstream branches
     # (candidate join, NIL spot scores, context vectors). Without an exchange
     # at the fork, Spark recomputes the Python UDF scan once per branch
-    # (~8x measured). A repartition on doc_id makes the fork an Exchange that
-    # ReuseExchange dedupes — the UDF runs exactly once per job, and the
-    # doc_id clustering feeds the downstream per-doc windows.
+    # (~8x measured). A repartition makes the fork an Exchange that
+    # ReuseExchange can dedupe (measured: not above a cached documents
+    # table, where each consumer still reruns the scan). Tokens cluster on
+    # their context key, so the query-vector aggregate needs no second
+    # shuffle.
     spots = spots.repartition("doc_id")
     spot_cands = generate_candidates(
         spots, model.surface_forms, model.candidates, heads=heads
     )
-    if use_context and tokens is None:
-        tokens = tokenize_documents(documents, stopwords=stopwords).repartition(
-            "doc_id"
-        )
-    elif not use_context:
+    ctx_col = "ctx_id" if window else "doc_id"
+    if not use_context:
         tokens = None
-    ctx_col = "doc_id"
-    if use_context and max_context_tokens:
+    elif tokens is None:
+        tokens = tokenize_documents(
+            documents, stopwords=stopwords, max_context_tokens=window
+        ).repartition(ctx_col)
+    if window and not ("ctx_id" in tokens.columns and "ctx_id" in spot_cands.columns):
         tokens, spot_cands = attach_context_windows(
-            tokens, spot_cands, max_context_tokens
+            tokens.drop("ctx_id"), spot_cands.drop("ctx_id"), window
         )
-        # Same fork discipline as the spots/tokens subtrees above: the
-        # attach outputs embed the window-assignment sub-DAG and feed
-        # several scoring branches (candidate scoring, cand_pairs
-        # distinct, NIL spot scores / query vectors) — without an
-        # exchange at the fork the assignment recomputes once per
-        # branch. The repartition makes it one ReuseExchange'd pass.
-        tokens = tokens.repartition("ctx_id")
-        spot_cands = spot_cands.repartition("doc_id")
-        ctx_col = "ctx_id"
     scored = score_candidates(
         spot_cands, tokens, model, use_context=use_context, ctx_col=ctx_col
     )

@@ -155,9 +155,11 @@ def run_checkpointed(
         # a second pass over the pipeline DAG would double every wave's cost.
         # Grouping on the partition column reads only file metadata. The
         # pseudo-bucket is included so unknown-doc rows are counted too.
+        # The schema is passed because a wave with no rows writes no file
+        # to infer it from.
         per_bucket = {
             str(r["bucket"]): r["n"]
-            for r in spark.read.parquet(data_path)
+            for r in spark.read.schema(out.schema).parquet(data_path)
             .filter(F.col("bucket").isin(list(wave) + [pseudo]))
             .groupBy("bucket")
             .agg(F.count("*").alias("n"))

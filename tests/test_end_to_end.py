@@ -9,6 +9,8 @@ from dbpedia_spotlight_spark.operators.filters import (
     support_filter,
     type_filter,
 )
+from dbpedia_spotlight_spark.operators.spotter import spot_documents
+from dbpedia_spotlight_spark.operators.tokenizer import tokenize_documents
 from dbpedia_spotlight_spark.pipeline.annotate import annotate, verify_span_invariant
 from dbpedia_spotlight_spark.pipeline.checkpoint import run_checkpointed
 from dbpedia_spotlight_spark.pipeline.evaluate import (
@@ -119,6 +121,99 @@ def test_annotate_plan_reuses_spot_exchange(world):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in plan
     assert plan.count("ReusedExchange") > 0, plan[:2000]
+
+
+def _ranked_rows(df):
+    return sorted(
+        (r["doc_id"], r["span_pos"], r["offset"], r["rank"], r["uri"],
+         r["similarity_score"], r["contextual_score"],
+         r["percentage_second_rank"])
+        for r in df.collect()
+    )
+
+
+@pytest.mark.parametrize("window", [250, 10])
+def test_builtin_windows_match_injected_attach_path(world, window):
+    """The scans' own ctx_id (built-in path) scores exactly like the
+    relational attach_context_windows path that injected tokens/spots take:
+    same rows, ranks and all three scores. At 10 tokens the fixture docs
+    split into several windows."""
+    docs, model = world.documents, world.model
+    if window == 10:
+        tagged = tokenize_documents(docs, max_context_tokens=window)
+        assert tagged.filter(~F.col("ctx_id").endswith("#0")).limit(1).count()
+    builtin = _ranked_rows(annotate(docs, model, k=2, max_context_tokens=window))
+    injected = _ranked_rows(annotate(
+        docs, model, k=2, max_context_tokens=window,
+        tokens=tokenize_documents(docs),
+        spots=spot_documents(docs, model.surface_forms),
+    ))
+    assert len(builtin) == len(injected) > 0
+    for got, want in zip(builtin, injected):
+        assert got[:5] == want[:5]
+        assert got[5:] == pytest.approx(want[5:], rel=1e-9, abs=1e-12)
+
+
+def test_default_annotate_skips_relational_window_pass(world, monkeypatch):
+    """Built-in scans carry ctx_id, so neither the windowed default nor
+    whole-doc scoring may plan the attach_context_windows sub-DAG."""
+    import dbpedia_spotlight_spark.pipeline.annotate as annotate_mod
+
+    def fail(*_args, **_kwargs):
+        raise AssertionError("attach_context_windows on the built-in path")
+
+    monkeypatch.setattr(annotate_mod, "attach_context_windows", fail)
+    docs = world.documents.limit(6)
+    assert annotate(docs, world.model).count() > 0
+    assert annotate(docs, world.model, max_context_tokens=None).count() > 0
+
+
+# Docs that name nothing: lowercase filler, and media-only docs.
+_QUIET_DOCS = [
+    ("quiet-0", [("text", "the river runs slowly past old mills.", None, 0)]),
+    ("quiet-1", [("text", "nothing here names anything", None, 0),
+                 ("media", None, "img://quiet-1", 28),
+                 ("text", "just more words.", None, 28)]),
+    ("media-0", [("media", None, "img://media-0", 0)]),
+    ("media-1", [("media", None, "img://media-1a", 0),
+                 ("media", None, "img://media-1b", 0)]),
+]
+
+
+def _quiet_docs(spark):
+    return spark.createDataFrame(
+        _QUIET_DOCS,
+        "doc_id string, spans array<struct<kind:string, text:string, "
+        "media_ref:string, offset:int>>",
+    )
+
+
+@pytest.mark.parametrize("use_context", [True, False])
+def test_annotate_docs_without_mentions(world, use_context):
+    """Regression: an Arrow batch that yields no spots (or no tokens) must
+    not raise — an empty dict-of-lists frame has float64 columns Arrow
+    cannot convert to list<string>. Each quiet doc sits alone in its
+    batch here; mixed with linking docs they still add no rows."""
+    quiet = _quiet_docs(world.documents.sparkSession)
+    assert annotate(quiet, world.model, use_context=use_context).count() == 0
+    mixed = world.documents.limit(4).unionByName(quiet)
+    rows = annotate(mixed, world.model, use_context=use_context).collect()
+    assert rows
+    assert not {r["doc_id"] for r in rows} & {d for d, _ in _QUIET_DOCS}
+
+
+def test_checkpointed_docs_without_mentions(world, tmp_path):
+    """The same empty-batch case through run_checkpointed, as the
+    no-context annotate job runs it."""
+    quiet = _quiet_docs(world.documents.sparkSession)
+    stats = run_checkpointed(
+        quiet,
+        lambda docs: annotate(docs, world.model, use_context=False),
+        str(tmp_path / "quiet"),
+        num_buckets=2,
+        wave_size=1,
+    )
+    assert stats["rows_written"] == 0
 
 
 def test_calibration_table_bins(spark):

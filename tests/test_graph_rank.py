@@ -556,6 +556,22 @@ def test_closeness_sampled_exact_at_full_pivots(spark):
         assert abs(s.harmonic - ex.harmonic) < 1e-9
 
 
+def test_closeness_sampled_needs_two_pivots(spark):
+    """One pivot has k'(v) = 0 for itself: the estimator would divide by
+    zero and coalesce the result to a fabricated 0.0, so it must raise —
+    also when a larger k is clipped to a one-node graph."""
+    import pytest
+
+    from dbpedia_spotlight_spark.operators.graph import closeness_centrality
+
+    e = _circulant(spark, n=12)
+    with pytest.raises(ValueError, match=">= 2 pivots"):
+        closeness_centrality(e, sample_sources=1)
+    loop = _edges(spark, [("a", "a")])
+    with pytest.raises(ValueError, match=">= 2 pivots"):
+        closeness_centrality(loop, sample_sources=5)
+
+
 def test_closeness_sampled_error_bound(spark):
     """k=8 of 12 probes: per-node scaled estimates stay within 60% of
     exact and the population means within 20% on the vertex-transitive

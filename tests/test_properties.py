@@ -351,12 +351,32 @@ def test_attach_windows_matches_bruteforce_assignment(spark):
     """r5 rewrite pin: the union+last() spot assignment equals the
     brute-force definition (last window whose start offset <= spot
     offset, else first window) on randomized token/spot layouts,
-    including spots at offsets that are not token offsets."""
+    including spots at offsets that are not token offsets. The scan-side
+    rule (context_windows/window_of, which tokenize_documents and
+    spot_documents apply) must match the same brute force on the same
+    layouts, and the scans themselves on multi-span docs with a media
+    span between two text spans."""
     import random
 
     from dbpedia_spotlight_spark.operators.disambiguate import (
         attach_context_windows,
     )
+    from dbpedia_spotlight_spark.operators.spotter import (
+        SpotterDictionary,
+        spot_documents,
+    )
+    from dbpedia_spotlight_spark.operators.tokenizer import (
+        context_windows,
+        tokenize_documents,
+        window_of,
+    )
+
+    def brute_window(offsets, off, W):
+        starts = [
+            (offsets[i], i // W) for i in range(0, len(offsets)) if i % W == 0
+        ]
+        eligible = [wid for (s, wid) in starts if s <= off]
+        return eligible[-1] if eligible else starts[0][1]
 
     rng = random.Random(7)
     tok_rows, spot_rows, docs = [], [], {}
@@ -383,12 +403,70 @@ def test_attach_windows_matches_bruteforce_assignment(spark):
     got = {(r["doc_id"], r["offset"]): r["ctx_id"] for r in sp.collect()}
 
     for (doc, off), ctx in got.items():
-        offsets = docs[doc]
-        starts = [
-            (offsets[i], i // W) for i in range(0, len(offsets)) if i % W == 0
-        ]
-        eligible = [wid for (s, wid) in starts if s <= off]
-        want_wid = eligible[-1] if eligible else starts[0][1]
-        assert ctx == f"{doc}#{want_wid}", (doc, off, ctx, starts)
+        want_wid = brute_window(docs[doc], off, W)
+        assert ctx == f"{doc}#{want_wid}", (doc, off, ctx)
+        # scan-side rule, fed the offsets in any order
+        shuffled = rng.sample(docs[doc], len(docs[doc]))
+        assert window_of(context_windows(shuffled, W), off) == want_wid
     # every spot got exactly one window
     assert len(got) == len({(r[0], r[2]) for r in spot_rows})
+    # a token's own window is its ordinal // W
+    for offsets in docs.values():
+        starts = context_windows(offsets, W)
+        assert [window_of(starts, o) for o in offsets] == [
+            i // W for i in range(len(offsets))
+        ]
+
+    # The scans on multi-span docs: [text, media, text] layouts whose
+    # second text span starts one char past the first (media occupies no
+    # chars), sentences of lowercase filler and capitalised names.
+    names = ["Alpha", "Beta", "Gamma Delta", "Epsilon"]
+    words = ["ox", "elm", "the", "runs", "of", "a"]
+    doc_rows = []
+    for d in range(30):
+        texts = []
+        for _ in range(rng.choice([1, 2, 2, 3])):
+            sent = [
+                rng.choice(names) if rng.random() < 0.3 else rng.choice(words)
+                for _ in range(rng.randint(1, 14))
+            ]
+            texts.append(" ".join(sent) + rng.choice([".", "", " !"]))
+        spans, off = [], 0
+        for i, text in enumerate(texts):
+            if i:
+                spans.append(("media", None, f"img://{d}/{i}", off))
+            spans.append(("text", text, None, off))
+            off += len(text) + 1
+        doc_rows.append((f"mdoc{d:02d}", spans))
+    doc_df = spark.createDataFrame(
+        doc_rows,
+        "doc_id string, spans array<struct<kind:string, text:string, "
+        "media_ref:string, offset:int>>",
+    )
+    dic = SpotterDictionary.build([(n, 9, 10) for n in names])
+    W = 4
+    tok_w = tokenize_documents(doc_df, max_context_tokens=W).collect()
+    spot_w = spot_documents(
+        doc_df, None, dictionary=dic, max_context_tokens=W
+    ).collect()
+    assert spot_w and any(not r["ctx_id"].endswith("#0") for r in spot_w)
+    doc_offsets: dict = {}
+    for r in tok_w:
+        doc_offsets.setdefault(r["doc_id"], []).append(r["offset"])
+    for offsets in doc_offsets.values():
+        offsets.sort()
+    for r in tok_w:
+        offsets = doc_offsets[r["doc_id"]]
+        assert r["ctx_id"] == f"{r['doc_id']}#{offsets.index(r['offset']) // W}"
+    for r in spot_w:
+        want_wid = brute_window(doc_offsets[r["doc_id"]], r["offset"], W)
+        assert r["ctx_id"] == f"{r['doc_id']}#{want_wid}", r
+    # ... and the relational pass over the unwindowed scans agrees
+    _tk, sp = attach_context_windows(
+        tokenize_documents(doc_df),
+        spot_documents(doc_df, None, dictionary=dic),
+        max_tokens=W,
+    )
+    assert sorted(
+        (r["doc_id"], r["offset"], r["ctx_id"]) for r in sp.collect()
+    ) == sorted((r["doc_id"], r["offset"], r["ctx_id"]) for r in spot_w)
